@@ -13,6 +13,14 @@ fetched (bench.py does this between queries; tests/conftest.py does it
 after every test). A long-lived session that never releases simply
 accumulates bounded-size intermediates until ``spark.catalog.clearCache()``
 — the registry makes the cleanup explicit instead of leaking handles.
+
+Width: session.py defaults
+``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` to true,
+so the plan behind a persist is AQE-coalesced like any other query and
+persisted intermediates are stored — and scanned — at coalesced width: a
+cached aggregate of a few KB is one partition and one task per scan, not
+one per shuffle partition. An explicit-width exchange
+(``repartition(n)``, ``repartitionByRange(n, ...)``) keeps its n.
 """
 
 from __future__ import annotations
@@ -59,8 +67,8 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
     Why (guide §2.5, input skew): the fixture tables are single-file
     single-row-group parquet, so every scan arrives as ONE input split —
     and AQE coalesces small post-shuffle relations back to one partition
-    — leaving everything upstream of the first wide exchange on one core
-    of the 32 available. The repartition moves only the NARROW
+    — leaving everything upstream of the first wide exchange on one of
+    the master's cores. The repartition moves only the NARROW
     pre-expansion rows (cheap) and parallelizes the expansion, which is
     where the CPU is. Unconditional rather than width-probed: checking
     the current width via ``df.rdd`` forces a full plan-to-RDD

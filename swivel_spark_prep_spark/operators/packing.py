@@ -9,10 +9,10 @@ straddle a boundary (that is the point: zero padding waste).
 
 Scale design: the only non-trivial step is the exclusive prefix sum of
 token counts in document order. A naive `SUM() OVER (ORDER BY ...)` is a
-single-task global window; instead this uses the same two-pass scheme as
-swivel.assign_ids — range-partition by the order column, partition-local
-prefix sums in parallel, then add per-partition offsets computed from the
-partition TOTALS (a driver-side cumsum over #partitions numbers, never
+single-task global window; instead this uses ranks.partitioned_prefix_sum
+(as swivel.assign_ids does) — range-partition by the order column,
+partition-local prefix sums in parallel, then add per-partition offsets
+computed from the partition TOTALS (a window over #partitions rows, never
 data). Identical results, no single-task stage.
 """
 

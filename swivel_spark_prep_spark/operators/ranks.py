@@ -71,7 +71,10 @@ def partitioned_prefix_sum(
 
     # NOT df.rdd.getNumPartitions() (plan-to-RDD conversion; single-file
     # inputs would collapse the range exchange to one partition) —
-    # shuffle.partitions is the knob deployments size to their data.
+    # shuffle.partitions is the knob deployments size to their data, and
+    # session.configure_runtime defaults it to the core count. AQE never
+    # coalesces this explicit-width exchange, so the width set here is
+    # the task count of every stage over the ranged relation.
     spark = df.sparkSession
     n_part = max(
         int(spark.conf.get("spark.sql.shuffle.partitions", "200")),

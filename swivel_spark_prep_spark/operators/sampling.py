@@ -135,11 +135,11 @@ def deterministic_shuffle(
     identically on every rerun" step of a data pipeline. md5 (not
     xxhash64) so external systems can replay the exact order.
 
-    The rank comes from swivel.assign_ids' two-pass scheme:
-    range-partition on the hash (parallel sorted runs), rank within each
-    partition, add per-partition offsets (a driver-side cumsum over
-    partition COUNTS, never data) — a global total order with no
-    single-reducer window. At 100 TB, skip the rank column when only the
+    The rank comes from swivel.assign_ids, an exclusive prefix count on
+    ranks.partitioned_prefix_sum: range-partition on the hash (parallel
+    sorted runs), count within each partition, add per-partition offsets
+    from the partition totals — a global total order with no
+    single-reducer window and no driver collect. At 100 TB, skip the rank column when only the
     order matters and write the range-sorted output directly.
     """
     h = F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string")))

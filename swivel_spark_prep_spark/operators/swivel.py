@@ -12,7 +12,7 @@ for Spark):
 
 Scale design (SURVEY.md §7.5 — deliberately NOT the reference's driver
 -collect-and-broadcast architecture):
-- id assignment uses a two-pass range-partitioned rank, never a global
+- id assignment is a range-partitioned prefix count, never a global
   row_number window (single-task bottleneck) and never a driver collect of
   the vocabulary;
 - the token→id mapping is applied with a join (Catalyst broadcasts it
@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -42,50 +42,17 @@ def tokenize(docs: DataFrame, text_col: str = "text", doc_col: str = "doc_id") -
 
 def assign_ids(df: DataFrame, order_cols: list, id_col: str = "id") -> DataFrame:
     """Deterministic dense 0-based ids by a total order, without a global
-    window. Two-pass rank: range-partition on the order, rank within each
-    partition in parallel, then add per-partition offsets (a tiny
-    driver-side cumsum over partition *counts*, never data)."""
-    # session parallelism, NOT df.rdd.getNumPartitions() — touching .rdd
-    # forces a full plan-to-RDD conversion just to read a partition count
-    n_part = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    ranged = df.repartitionByRange(n_part, *order_cols).sortWithinPartitions(*order_cols)
-    with_pid = ranged.withColumn("_pid", F.spark_partition_id())
-    # Pass 1: per-partition counts (n_part rows — metadata, not data).
-    counts = dict(
-        with_pid.groupBy("_pid").count().collect()
+    window: the id is the exclusive prefix count over ``order_cols``,
+    computed by ranks.partitioned_prefix_sum in one action (one range
+    exchange, shared by its local and offset branches)."""
+    from swivel_spark_prep_spark.operators.ranks import partitioned_prefix_sum
+
+    one = df.withColumn("_one", F.lit(1))
+    return (
+        partitioned_prefix_sum(one, order_cols, "_one", ["_id"])
+        .withColumn(id_col, F.col("_id").cast("long"))
+        .drop("_one", "_id")
     )
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    # Pass 2: rank within each partition (parallel windows) + offset.
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    local = with_pid.withColumn("_rn", F.row_number().over(w) - 1)
-    if len(offsets) <= 64:
-        # small cluster: constant-fold the offsets into one expression
-        offset_col = F.coalesce(
-            *[
-                F.when(F.col("_pid") == pid, F.lit(off))
-                for pid, off in offsets.items()
-            ]
-            or [F.lit(0)],
-            F.lit(0),
-        )
-        ranked = local.withColumn(
-            id_col, (F.col("_rn") + offset_col).cast("long")
-        )
-    else:
-        # thousands of partitions: a 10⁴-branch CASE chain blows up
-        # codegen — broadcast-join the (pid, offset) table instead
-        spark = df.sparkSession
-        off_df = spark.createDataFrame(
-            [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _off long"
-        )
-        ranked = local.join(F.broadcast(off_df), "_pid").withColumn(
-            id_col, (F.col("_rn") + F.col("_off")).cast("long")
-        ).drop("_off")
-    return ranked.drop("_pid", "_rn")
 
 
 def build_vocab(

@@ -1260,9 +1260,8 @@ FROM documents ORDER BY shuffle_rank;""",
 )
 def x46(spark, sf_dir):
     # Reproducible global training-order shuffle: rank by
-    # md5(salt || key) via assign_ids' two-pass range-partitioned rank
-    # (per-partition counts are the only driver traffic — no global
-    # window). Changing the salt ("ep1", …) reshuffles per epoch,
+    # md5(salt || key) via assign_ids' range-partitioned prefix count
+    # (no global window, no driver collect). Changing the salt ("ep1", …) reshuffles per epoch,
     # identically on every engine and rerun.
     from swivel_spark_prep_spark.operators import sampling
 

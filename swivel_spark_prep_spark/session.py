@@ -1,14 +1,20 @@
 """SparkSession factory with the engine's required configuration.
 
-Required confs (SURVEY.md §1.3):
+Forced confs (SURVEY.md §1.3) — oracle parity depends on them, so they
+are set on every session whatever the caller chose:
 - ``spark.sql.session.timeZone=UTC`` — keeps TIMESTAMP_NTZ comparisons
   aligned with the DuckDB oracle.
 - ``spark.sql.legacy.parquet.nanosAsLong=true`` — events.parquet stores
   INT64 TIMESTAMP(NANOS) which Spark 4.1 otherwise refuses to read
   ([PARQUET_TYPE_ILLEGAL]); the catalog converts the long back to
   timestamp_ntz.
-- AQE on — runtime shuffle-partition coalescing, skew-join splitting,
-  dynamic broadcast: the scale levers we rely on at 100 TB.
+
+Performance defaults — AQE (runtime shuffle-partition coalescing,
+skew-join splitting, dynamic broadcast: the scale levers we rely on at
+100 TB), Arrow transfer, shuffle width — apply only where neither the
+caller (``conf=``, ``spark.conf.set``) nor the deployment
+(spark-submit ``--conf``, spark-defaults) set the key, so cluster
+sizing always wins over this module's host-derived values.
 """
 
 from __future__ import annotations
@@ -17,17 +23,24 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: Confs that are safe to set at runtime on an existing session.
-RUNTIME_CONFS = {
+#: Confs oracle parity depends on — forced on every session.
+FORCED_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+#: Runtime performance defaults — each applies only while the key is
+#: unset. ``spark.sql.shuffle.partitions`` joins them at session time
+#: (see :func:`configure_runtime`).
+DEFAULT_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # AQE coalesces most shuffles anyway, but streaming state shuffles are
-    # not AQE-planned — a vanilla 200-partition session pays 6× overhead on
-    # local[32]; at cluster scale this is sized per deployment.
-    "spark.sql.shuffle.partitions": "32",
+    # Spark plans a persisted relation with AQE coalescing off, so a
+    # cached aggregate of a few KB is stored — and every later scan of
+    # it runs — at full shuffle width; let AQE coalesce cached plans
+    # like any other query (cache.track_persist relies on this).
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # bigger Arrow batches cut driver-fetch conversion ~20% on wide
     # results (measured Q28 sf0.1); also the pandas-UDF batch size — at
@@ -49,6 +62,10 @@ RUNTIME_CONFS = {
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
 }
 
+#: Default shuffle width on a non-local master, where the slot count is
+#: not known at session start; deployments set their own.
+CLUSTER_SHUFFLE_PARTITIONS = 32
+
 #: Confs that must be set before the JVM starts.
 STARTUP_CONFS = {
     "spark.driver.memory": "12g",
@@ -57,13 +74,30 @@ STARTUP_CONFS = {
 
 
 def configure_runtime(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an existing session (e.g. one the
-    verify driver created without our settings)."""
-    for k, v in RUNTIME_CONFS.items():
-        try:
+    """Apply the engine's runtime confs to an existing session (e.g. one
+    a caller of ``__spark_entry__`` created without our settings): the
+    forced confs always, each performance default only if the key is
+    unset.
+
+    The shuffle width defaults to the core count on a ``local[...]``
+    master (local[4] → 4, local[32] → 32), where ``defaultParallelism``
+    is known when the session starts. On a cluster master executors may
+    register after ``getOrCreate``, so ``defaultParallelism`` would
+    undercount; there the default stays :data:`CLUSTER_SHUFFLE_PARTITIONS`
+    and a deployment sizes ``spark.sql.shuffle.partitions`` itself.
+    """
+    for k, v in FORCED_CONFS.items():
+        spark.conf.set(k, v)
+    sc = spark.sparkContext
+    local = sc.master.startswith("local")
+    width = sc.defaultParallelism if local else CLUSTER_SHUFFLE_PARTITIONS
+    defaults = {**DEFAULT_CONFS, "spark.sql.shuffle.partitions": str(width)}
+    # RuntimeConfig.contains: set on this session or merged in from the
+    # SparkConf — registered defaults don't count
+    jconf = spark.conf._jconf
+    for k, v in defaults.items():
+        if not jconf.contains(k):
             spark.conf.set(k, v)
-        except Exception:
-            pass  # immutable in this build — session factory already set it
     return spark
 
 
@@ -81,7 +115,10 @@ def get_session(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    for k, v in {**STARTUP_CONFS, **RUNTIME_CONFS, **(conf or {})}.items():
+    # performance defaults stay out of the builder: there they would
+    # override the deployment's SparkConf; configure_runtime fills them
+    # in only where nothing was set
+    for k, v in {**STARTUP_CONFS, **FORCED_CONFS, **(conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return configure_runtime(spark)

@@ -23,6 +23,7 @@ end); plan-guardrail walks are per-thread py4j traffic.
 
 from __future__ import annotations
 
+import os
 import threading
 from concurrent.futures import ThreadPoolExecutor
 
@@ -33,6 +34,12 @@ from _sfs import SF_SMOKE
 #: oversubscribe the local[8] test session (guide §2.6: "2-3 jobs in
 #: flight is plenty" — replay jobs are tinier than that advice assumes)
 _WORKERS = 4
+
+
+def is_smoke_dir(sf_dir) -> bool:
+    """True iff ``sf_dir`` names the smoke SF — compared as resolved
+    paths, so a trailing slash or a symlink still gets the guardrail."""
+    return os.path.realpath(sf_dir) == os.path.realpath(SF_SMOKE)
 
 
 def prefetch_replays(spark, sf_dir, queries, oracles, extra_check=None):
@@ -50,7 +57,7 @@ def prefetch_replays(spark, sf_dir, queries, oracles, extra_check=None):
         try:
             df = queries[name](spark, sf_dir)
             problems: list[str] = []
-            if sf_dir == SF_SMOKE:
+            if is_smoke_dir(sf_dir):
                 # guardrail on the SAME DataFrame the replay executes —
                 # one Catalyst planning pass per query per suite run
                 try:

@@ -13,9 +13,13 @@ whole registry stays covered: registry-completeness is asserted below.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from _guardrail import _ALL, assert_plan_guardrail
+from _replay import is_smoke_dir
+from _sfs import SF_SMOKE
 from swivel_spark_prep_spark.cache import release_persisted
 from swivel_spark_prep_spark.queries.declared import DECLARED_ORACLES
 from swivel_spark_prep_spark.queries.extra import EXTRA_ORACLES
@@ -40,3 +44,11 @@ def test_no_new_global_window_or_cartesian(name, spark, sf_dir):
         assert_plan_guardrail(name, _ALL[name](spark, sf_dir))
     finally:
         release_persisted()
+
+
+def test_replay_guardrail_matches_smoke_dir_spellings():
+    # the replay runs the guardrail only at the smoke SF; a trailing
+    # slash must not switch it off
+    assert is_smoke_dir(SF_SMOKE)
+    assert is_smoke_dir(SF_SMOKE.rstrip("/") + "/")
+    assert not is_smoke_dir(os.path.join(os.path.dirname(SF_SMOKE.rstrip("/")), "sf0.01"))

@@ -51,6 +51,25 @@ def test_assign_ids_matches_global_row_number(spark, sf_dir):
     assert [r.id for r in rows] == list(range(len(rows)))
 
 
+def test_assign_ids_stable_across_calls_on_shuffled_input(spark):
+    # ≥10k keys coming out of a shuffle: the range exchange's bounds
+    # come from a sample of rows whose order differs between runs, so
+    # the count pass and the ranking pass must read one materialization
+    n = 12_000
+    counts = (
+        spark.range(0, 6 * n, numPartitions=8)
+        .select((F.col("id") % n).alias("k"), (F.col("id") % 5).alias("w"))
+        .groupBy("k")
+        .agg(F.sum("w").alias("cnt"))
+    )
+    expect = [r.k for r in sorted(counts.collect(), key=lambda r: (-r.cnt, r.k))]
+    for _ in range(3):
+        got = assign_ids(counts, [F.col("cnt").desc(), F.col("k").asc()])
+        rows = sorted(got.select("k", "id").collect(), key=lambda r: r.id)
+        assert [r.id for r in rows] == list(range(n))
+        assert [r.k for r in rows] == expect
+
+
 def test_cooc_symmetric(result):
     # M = Mᵀ: joining the matrix to its transpose finds every entry with
     # equal weight.
